@@ -43,16 +43,24 @@ def own_cached(result: DataFrame, *rels: DataFrame) -> DataFrame:
 
 def plan_already_cached(df: DataFrame) -> bool:
     """True when the CacheManager already holds a ``sameResult`` entry
-    for ``df``'s plan — i.e. a ``persist()`` on it would attach to an
-    existing cached relation instead of registering a new one. Used by
-    eager model fits to skip the fill-forcing action when an identical
-    model is already session-cached (fit once, score many): the count
-    job over the cached blocks is pure per-call overhead there.
+    for ``df``'s plan AND that entry is filled — every partition's
+    blocks are in the block manager. A ``persist()`` on ``df`` then
+    attaches to blocks that exist. Used by eager model fits to skip the
+    fill-forcing action when an identical model is already
+    session-cached (fit once, score many): the count job over the
+    cached blocks is pure per-call overhead there. An entry that is
+    only registered (a lazy ``persist()`` no action has run yet) or
+    partly evicted reads False, so an eager fit still fills it.
     Conservative ``False`` on any reflection failure."""
     try:
         jss = df.sparkSession._jsparkSession
+        entry = jss.sharedState().cacheManager().lookupCachedData(df._jdf)
         return bool(
-            jss.sharedState().cacheManager().lookupCachedData(df._jdf).isDefined()
+            entry.isDefined()
+            and entry.get()
+            .cachedRepresentation()
+            .cacheBuilder()
+            .isCachedColumnBuffersLoaded()
         )
     except Exception:
         return False

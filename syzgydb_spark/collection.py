@@ -241,6 +241,8 @@ class Collection:
         self.path = path
         self.options = options
         self._lock = _mutation_lock(path)
+        # (snapshot key, decoded view) of the last live read; see df()
+        self._live = None
         # the storage seam: every manifest/commit/vacuum/history call
         # below goes through this object; swapping the table format
         # means swapping this one attribute (see syzgydb_spark/storage.py
@@ -449,18 +451,14 @@ class Collection:
         files actually carry them."""
         raw = self._raw(manifest=self._manifest_at(version))
         have = set(raw.columns)
-        cols = [
-            F.col("id"),
-            _dequantize_expr(F.col("vector_enc"), self.options.quantization).alias("vector"),
-            F.col("metadata"),
-        ]
+        cols = []
         if self.index is not None:
-            cols += [F.col(c) for c in self.index.sig_cols() if c in have]
+            cols += [c for c in self.index.sig_cols() if c in have]
         if self.pq_index is not None and "pq_code" in have:
-            cols.append(F.col("pq_code"))
+            cols.append("pq_code")
         if self.ivf_index is not None and "ivf_cell" in have:
-            cols.append(F.col("ivf_cell"))
-        return raw.select(*cols)
+            cols.append("ivf_cell")
+        return self._decode(raw, cols)
 
     def changes_between(self, v_from: int, v_to: int) -> DataFrame:
         """Row-level change feed between two readable versions (CDC —
@@ -528,11 +526,13 @@ class Collection:
 
     def compact(self, buckets: list[int] | None = None) -> dict:
         """Rewrite buckets whose live file count exceeds one into a
-        single file each (small-file compaction — the upsert path adds
-        a file per touched bucket per commit, and parquet scan/footer
-        overhead grows with file count). One ``repartition("bucket")``
-        shuffle of just the touched buckets; each bucket lands wholly
-        in one task, so the writer emits exactly one file per bucket.
+        single file each (small-file compaction — a commit writes one
+        file per touched bucket per write task holding rows of it, so
+        a bulk add at ``local[4]`` leaves 4 files per bucket, and
+        parquet scan/footer overhead grows with file count). One
+        ``repartition("bucket")`` shuffle of just the touched buckets;
+        each bucket lands wholly in one task, so the writer emits
+        exactly one file per bucket.
         Runs under the same lock + CAS-retry protocol as any mutation —
         concurrent upserts either serialize before or retry after. At
         100 TB you'd bound output file size instead with
@@ -641,29 +641,43 @@ class Collection:
         (the caller's CAS loop re-merges on a fresh snapshot); a live
         read simply re-snapshots and retries here, which for a reader
         is just "see the newest committed state"."""
+        if manifest is None:
+            return self._on_live_snapshot(lambda man: self._scan(man, buckets))
+        try:
+            return self._scan(manifest, buckets)
+        except Exception as e:
+            if not _is_stale_scan_error(e):
+                raise
+            raise ManifestConflictError(
+                "data file reclaimed by a concurrent commit during "
+                "scan construction; re-merge on a fresh manifest"
+            ) from e
+
+    def _scan(self, manifest: dict, buckets: list[int] | None = None) -> DataFrame:
+        """A new parquet scan of ``manifest``'s files (of ``buckets``
+        only, when given). Builds the relation eagerly: Spark lists the
+        files (a parallel listing job above 32 paths) and reads a footer
+        for the schema."""
+        paths = self.storage.data_paths(manifest, buckets)
+        if not paths:
+            # an empty collection has no parquet footers to infer from
+            return self._empty_df()
+        # basePath keeps `bucket` as a partition column → partition
+        # pruning on bucket-equality predicates is free
+        return self.spark.read.option("basePath", self._data_dir()).parquet(*paths)
+
+    def _on_live_snapshot(self, read):
+        """``read(manifest)`` on the live manifest. A stale-scan error
+        (a cross-process commit reclaimed one of the snapshot's files
+        while the scan was being built) re-snapshots and retries."""
         for _attempt in range(_MAX_COMMIT_RETRIES):
             if _attempt:
                 _conflict_backoff(_attempt)
-            paths = self.storage.data_paths(
-                manifest or self._manifest(), buckets
-            )
-            if not paths:
-                # an empty collection has no parquet footers to infer from
-                return self._empty_df()
-            # basePath keeps `bucket` as a partition column → partition
-            # pruning on bucket-equality predicates is free
             try:
-                return self.spark.read.option(
-                    "basePath", self._data_dir()
-                ).parquet(*paths)
+                return read(self._manifest())
             except Exception as e:
                 if not _is_stale_scan_error(e):
                     raise
-                if manifest is not None:
-                    raise ManifestConflictError(
-                        "data file reclaimed by a concurrent commit during "
-                        "scan construction; re-merge on a fresh manifest"
-                    ) from e
         raise ManifestConflictError(
             f"live scan lost the reclaim race {_MAX_COMMIT_RETRIES} times"
         )
@@ -682,31 +696,84 @@ class Collection:
         )
         return sorted(r["b"] for r in rows)
 
+    def _index_cols(self) -> list[str]:
+        """Stored columns the decoded view carries after id, vector and
+        metadata: LSH signatures, ``pq_code``, ``ivf_cell`` and the
+        promoted hot-path columns, as configured on this instance."""
+        cols = []
+        if self.index is not None:
+            cols += self.index.sig_cols()
+        if self.pq_index is not None:
+            cols.append("pq_code")
+        if self.ivf_index is not None:
+            cols.append("ivf_cell")
+        if self.options.promoted and self.metadata_type is None:
+            # promoted hot-path columns ride along so the pushdown
+            # shadow of a filter can bind to them (result projections
+            # drop them at the end of every search path)
+            cols += [s["col"] for s in self.options.promoted.values()]
+        return cols
+
+    def _decode(self, raw: DataFrame, cols=()) -> DataFrame:
+        """Stored layout → id, vector ARRAY<DOUBLE>, metadata, ``cols``."""
+        return raw.select(
+            F.col("id"),
+            _dequantize_expr(F.col("vector_enc"), self.options.quantization).alias(
+                "vector"
+            ),
+            F.col("metadata"),
+            *cols,
+        )
+
     def df(
         self,
         buckets: list[int] | None = None,
         *,
         manifest: dict | None = None,
     ) -> DataFrame:
-        """Decoded view: id, vector ARRAY<DOUBLE>, metadata (+ lsh sigs)."""
-        raw = self._raw(buckets, manifest=manifest)
-        cols = [
-            F.col("id"),
-            _dequantize_expr(F.col("vector_enc"), self.options.quantization).alias("vector"),
-            F.col("metadata"),
-        ]
-        if self.index is not None:
-            cols += [F.col(c) for c in self.index.sig_cols()]
-        if self.pq_index is not None:
-            cols += [F.col("pq_code")]
-        if self.ivf_index is not None:
-            cols += [F.col("ivf_cell")]
-        if self.options.promoted and self.metadata_type is None:
-            # promoted hot-path columns ride along so the pushdown
-            # shadow of a filter can bind to them (result projections
-            # drop them at the end of every search path)
-            cols += [F.col(s["col"]) for s in self.options.promoted.values()]
-        return raw.select(*cols)
+        """Decoded view: id, vector ARRAY<DOUBLE>, metadata (+ lsh sigs,
+        pq_code, ivf_cell, promoted columns).
+
+        The live read (no ``buckets``, no pinned ``manifest``) is what
+        ``search``, ``search_many``, ``count``, ``get_all_ids`` and
+        ``stats`` share. It reads the manifest on every call, but the
+        scan it returns is built once per snapshot: while the manifest
+        names the same bucket → file lists and this instance projects
+        the same columns, the view built for that snapshot is returned
+        again. Building one costs a schema footer read job, plus a
+        parallel file-listing job above 32 files (~0.5 s together for
+        a 64-file collection), so a search on an unchanged collection
+        runs only its own job. This
+        is safe because data files are immutable and versioned
+        (``v{N}-…parquet``; a commit only ever adds new names) and a
+        file the live manifest names is never deleted, so the file
+        index captured for a snapshot stays valid as long as the
+        manifest lists it. Any commit, from this instance, another
+        instance or another process, changes the map and the next call
+        builds a new scan. Only the latest snapshot is kept. Bucket-
+        pruned and pinned-manifest reads (every mutation,
+        ``snapshot()``) always build a new scan."""
+        if buckets is not None or manifest is not None:
+            return self._decode(
+                self._raw(buckets, manifest=manifest), self._index_cols()
+            )
+        return self._on_live_snapshot(self._live_view)
+
+    def _live_view(self, manifest: dict) -> DataFrame:
+        cols = self._index_cols()
+        key = (
+            sorted((b, tuple(files)) for b, files in manifest["buckets"].items()),
+            cols,
+        )
+        # one (key, view) pair swapped as a whole: concurrent readers
+        # see either the old pair or the new one, and two that miss
+        # together each build a correct view (the last one stays)
+        cached = self._live
+        if cached is not None and cached[0] == key:
+            return cached[1]
+        view = self._decode(self._scan(manifest), cols)
+        self._live = (key, view)
+        return view
 
     def _decoded_plain(self, manifest: dict) -> DataFrame:
         """(id, vector, metadata) decoded view of a manifest snapshot
@@ -714,14 +781,7 @@ class Collection:
         pre-index files through this while the new index is already
         installed on the instance (df() would project the not-yet-
         existing index columns)."""
-        raw = self._raw(manifest=manifest)
-        return raw.select(
-            F.col("id"),
-            _dequantize_expr(F.col("vector_enc"), self.options.quantization).alias(
-                "vector"
-            ),
-            F.col("metadata"),
-        )
+        return self._decode(self._raw(manifest=manifest))
 
     # ---- mutation (AddDocument / UpdateDocument / removeDocument,
     #      collection.go:427-521) ----
@@ -970,10 +1030,10 @@ class Collection:
         collection.go:326-342; note the reference's *listing* path
         sorts ids lexicographically as strings, spanfile.go:540-560 — a
         quirk we deliberately do not reproduce)."""
-        return [r["id"] for r in self._raw().select("id").orderBy("id").collect()]
+        return [r["id"] for r in self.df().select("id").orderBy("id").collect()]
 
     def count(self) -> int:
-        return self._raw().count()
+        return self.df().count()
 
     def stats(self, samples: int = 100, seed: int = 42) -> dict:
         """CollectionStats incl. sampled average pairwise distance
@@ -1732,5 +1792,5 @@ class Collection:
         total = self.count()
         if total == 0:
             return 100.0
-        cand = self._raw().where(self.index.candidate_predicate(vector)).count()
+        cand = self.df().where(self.index.candidate_predicate(vector)).count()
         return 100.0 * cand / total

@@ -31,7 +31,15 @@ touched, base, ...)``   ``df``'s, invisibly stage → publish via the CAS
 ``vacuum(grace)``       delete unreferenced files, sparing files that
                         could be another process's staged-not-yet-
                         committed work for ``grace`` seconds (aged from
-                        the moment they became commit candidates).
+                        the moment they became commit candidates). The
+                        referenced set and the live version it is
+                        compared with come from one snapshot.
+data files              immutable and versioned: a commit only adds
+                        new ``v{N}-`` names, and no operation deletes
+                        or rewrites a file the live manifest names.
+                        ``Collection.df`` relies on this to build one
+                        live scan per manifest snapshot and reuse it
+                        until the bucket → file lists change.
 ``history() /           readable versions and their manifests (time
 manifest_at(v)``        travel); without retained history only the
                         live version is readable.
@@ -120,6 +128,9 @@ class ManifestBackend:
     # both eagerly. FaultInjectingBackend flips these to Delta's policy.
     _eager_loser_cleanup = True
     _eager_reclaim = True
+    # vacuum's grace window spares only unreferenced files whose v{N}-
+    # prefix is ahead of the live version; Delta keys it on mtime alone
+    _version_gated_grace = True
 
     def __init__(self, path: str, *, retain_history: bool = False):
         self.path = path
@@ -348,12 +359,23 @@ class ManifestBackend:
         (Delta's VACUUM retention contract). Crash debris ages past the
         window or falls behind the version counter and is reclaimed on
         a later pass; pass ``grace_seconds=0`` when no other writer can
-        be active to reclaim a known-dead commit immediately."""
+        be active to reclaim a known-dead commit immediately.
+
+        The referenced set and the live version come from ONE manifest
+        snapshot. Read separately, a commit landing between the two
+        reads would leave its new files outside the referenced set yet
+        not ahead of the (newer) live version, and vacuum would delete
+        files the live manifest names.
+
+        Subclasses with ``_version_gated_grace = False`` (Delta's VACUUM
+        RETAIN) apply the grace window to every unreferenced file, so
+        mtime alone decides."""
         import re
         import time
 
-        live = self.referenced_files()
-        live_version = self.read_manifest()["version"]
+        snapshot = self.read_manifest()
+        live = self.referenced_files(snapshot)
+        live_version = snapshot["version"]
         now = time.time()
         removed = 0
         data = self.data_dir()
@@ -366,7 +388,8 @@ class ManifestBackend:
                     continue
                 fpath = os.path.join(data, entry, fname)
                 m = re.match(r"v(\d+)-", fname)
-                if m and int(m.group(1)) > live_version and grace_seconds > 0:
+                ahead = bool(m) and int(m.group(1)) > live_version
+                if grace_seconds > 0 and (ahead or not self._version_gated_grace):
                     try:
                         age = now - os.path.getmtime(fpath)
                     except FileNotFoundError:
@@ -408,11 +431,12 @@ class ManifestBackend:
                 f"v{live['version']}; retained: {self.history()})"
             ) from None
 
-    def referenced_files(self) -> set[tuple[str, str]]:
+    def referenced_files(self, live: dict | None = None) -> set[tuple[str, str]]:
         """(bucket, filename) pairs referenced by the live manifest and
-        every retained history manifest."""
+        every retained history manifest. ``live`` is a live snapshot
+        the caller already holds (default: read one now)."""
         refs = set()
-        manifests = [self.read_manifest()]
+        manifests = [live or self.read_manifest()]
         hist = self.history_dir()
         if os.path.isdir(hist):
             for fname in os.listdir(hist):
@@ -577,7 +601,11 @@ class SqliteCatalogBackend(ManifestBackend):
             )
         return json.loads(row[0])
 
-    def referenced_files(self) -> set[tuple[str, str]]:
+    def referenced_files(self, live: dict | None = None) -> set[tuple[str, str]]:
+        """As ManifestBackend's: the catalog holds the live manifest and
+        every retained one. A ``live`` snapshot the caller holds is
+        referenced too, even if a later commit already replaced it in
+        the catalog (vacuum compares against that snapshot's version)."""
         conn = self._db()
         try:
             bodies = [
@@ -586,6 +614,8 @@ class SqliteCatalogBackend(ManifestBackend):
             ]
         finally:
             conn.close()
+        if live is not None:
+            bodies.append(live)
         refs: set[tuple[str, str]] = set()
         for man in bodies:
             for b, files in man["buckets"].items():
@@ -669,6 +699,11 @@ class FaultInjectingBackend(SqliteCatalogBackend):
 
     _eager_loser_cleanup = False  # Delta: losers' files stay for VACUUM
     _eager_reclaim = False        # Delta: replaced files stay for VACUUM
+    # VACUUM RETAIN: every unreferenced file younger than grace_seconds
+    # survives, everything older is reclaimed — mtime alone decides
+    # (a pinned reader inside the horizon keeps scanning;
+    # grace_seconds=0 models retentionDurationCheck.enabled=false)
+    _version_gated_grace = False
 
     def __init__(self, path: str, *, retain_history: bool = False,
                  partition_level_conflicts: bool = True):
@@ -786,42 +821,6 @@ class FaultInjectingBackend(SqliteCatalogBackend):
             encoded, touched, base_manifest,
             bloom_on_id=bloom_on_id, flip_fn=delta_flip,
         )
-
-    # ---- VACUUM RETAIN (mtime-only retention, no version heuristic) ----
-    def vacuum(self, grace_seconds: float = 300.0) -> int:
-        """``VACUUM <table> RETAIN <grace>``: reclaim every data file
-        not referenced by any readable version AND older than the
-        retention horizon — mtime alone decides, exactly Delta's
-        contract (a pinned reader inside the horizon keeps scanning;
-        ``grace_seconds=0`` is the disabled-retention-check escape
-        hatch the ``test_cas`` clause uses)."""
-        import time
-
-        live = self.referenced_files()
-        now = time.time()
-        removed = 0
-        data = self.data_dir()
-        for entry in os.listdir(data):
-            if not entry.startswith("bucket="):
-                continue
-            b = entry.split("=", 1)[1]
-            for fname in os.listdir(os.path.join(data, entry)):
-                if not fname.endswith(".parquet") or (b, fname) in live:
-                    continue
-                fpath = os.path.join(data, entry, fname)
-                if grace_seconds > 0:
-                    try:
-                        age = now - os.path.getmtime(fpath)
-                    except FileNotFoundError:
-                        continue
-                    if age < grace_seconds:
-                        continue  # inside the retention horizon
-                try:
-                    os.remove(fpath)
-                except FileNotFoundError:
-                    continue
-                removed += 1
-        return removed
 
 
 class DeltaBackend:

@@ -381,6 +381,31 @@ def test_unigram_lm_eager_fit_runs_once(spark):
     release_cached(lm3)
 
 
+def test_eager_fit_fills_a_lazily_registered_model(spark):
+    """An ``eager=False`` fit registers the model's cache entry without
+    filling it; a later ``eager=True`` fit of the same model must still
+    run the fill (a registered-but-empty entry is not "already
+    cached"), after which the entry reads as cached."""
+    from syzgydb_spark.cache import plan_already_cached, release_cached
+    from syzgydb_spark.operators.quality import unigram_lm
+
+    docs = spark.createDataFrame(
+        [(1, "lazy eager lazy"), (2, "eager fill eager"), (3, "fill lazy")],
+        "doc_id LONG, text STRING",
+    )
+    lazy = unigram_lm(docs, min_count=2, alpha=0.5, eager=False)
+    assert not plan_already_cached(lazy)
+    sc = spark.sparkContext
+    sc.setJobGroup("lm-fit-after-lazy", "eager fit after a lazy one")
+    eager = unigram_lm(docs, min_count=2, alpha=0.5)
+    sc.setJobGroup(None, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup("lm-fit-after-lazy")) >= 1
+    assert plan_already_cached(eager)
+    release_cached(lazy)
+    release_cached(eager)
+
+
 def test_lm_perplexity_orders_common_vs_rare(spark):
     from syzgydb_spark.operators.quality import lm_perplexity, unigram_lm
 

@@ -231,3 +231,62 @@ def test_flip_fn_interception_guards_real_commit_path(backend, spark):
     backend.commit_buckets(_df(spark, [(5, 0)]), [0], man, flip_fn=flip)
     assert calls == [man["version"] + 1]
     assert _read_ids(spark, backend) == [5]
+
+
+def _land_file(backend, bucket, name):
+    """Put a committed-looking data file in place (vacuum only looks
+    at names, references and mtimes, never at file contents)."""
+    d = os.path.join(backend.data_dir(), f"bucket={bucket}")
+    os.makedirs(d, exist_ok=True)
+    with open(os.path.join(d, name), "wb") as f:
+        f.write(b"x")
+    return os.path.join(d, name)
+
+
+def test_vacuum_reads_live_set_and_version_from_one_snapshot(tmp_path, monkeypatch):
+    """Deterministic replay of the vacuum-vs-commit race: vacuum's
+    manifest reads see v1, then v2 (a commit landed in between). Taking
+    the referenced set from v1 and the live version from v2 left v2's
+    new file neither referenced nor ahead of the live version, so it
+    was deleted while the live manifest named it."""
+    b = ManifestBackend(str(tmp_path / "tbl"))
+    os.makedirs(b.path)
+    b.initialize()
+    _land_file(b, 0, "v1-part-a.parquet")
+    committed = _land_file(b, 0, "v2-part-b.parquet")
+    v1 = {"version": 1, "buckets": {"0": ["v1-part-a.parquet"]}}
+    v2 = {"version": 2, "buckets": {"0": ["v2-part-b.parquet"]}}
+    reads = iter([v1])
+    monkeypatch.setattr(b, "read_manifest", lambda: next(reads, v2))
+    b.vacuum(grace_seconds=60)
+    assert os.path.exists(committed), "vacuum deleted a committed file"
+
+
+def test_vacuum_spares_commit_landing_mid_vacuum(backend):
+    """Every backend: a commit that lands while vacuum runs (right
+    after vacuum has read which files are referenced) keeps every file
+    its manifest names."""
+    _land_file(backend, 0, "v2-part-a.parquet")
+    backend.flip_manifest(
+        {"version": 2, "buckets": {"0": ["v2-part-a.parquet"]}}, expected_version=1
+    )
+    orig = backend.referenced_files
+    landed = []
+
+    def referenced_then_commit(*args):
+        refs = orig(*args)
+        if not landed:
+            landed.append(_land_file(backend, 0, "v3-part-b.parquet"))
+            backend.flip_manifest(
+                {"version": 3, "buckets": {"0": ["v3-part-b.parquet"]}},
+                expected_version=2,
+            )
+        return refs
+
+    backend.referenced_files = referenced_then_commit
+    backend.vacuum(grace_seconds=60)
+    assert landed
+    live = backend.read_manifest()
+    assert live["version"] == 3
+    for fname in live["buckets"]["0"]:
+        assert os.path.exists(os.path.join(backend.data_dir(), "bucket=0", fname))
