@@ -22,6 +22,13 @@ Model relations that are THEMSELVES the returned, persisted DataFrame
 ``release_cached(model)`` and ``model.unpersist()`` are equivalent.
 ``release_cached`` is always safe to call: a DataFrame with no
 attached handles is a no-op, and releasing twice is idempotent.
+
+Releasing is per plan, not per object. Spark's CacheManager keys a
+cached relation by its plan, so two fits of the same plan (the same
+operator on the same input with the same parameters) share ONE cache
+entry, even though each result carries its own handle. Releasing
+either result drops the entry for both: the other stays valid, but
+its next action pays for the computation again.
 """
 
 from __future__ import annotations

@@ -229,7 +229,14 @@ def cluster_balanced_sample(
 
     Returns the input rows plus ``ivf_cell`` and ``sample_rank``
     (1..k within the cell). Deterministic given the fitted centers and
-    seed; engine-portable, so a SQL oracle reproduces the exact rows."""
+    seed; engine-portable, so a SQL oracle reproduces the exact rows.
+
+    The input ``df`` must itself be deterministic: the same rows on
+    every evaluation (a table scan or a pure transformation of one, not
+    a ``rand()``-based sample or a nondeterministic UDF). The cell
+    assignment is persisted lazily, and blocks lost with an executor
+    are recomputed from ``df``'s lineage; a recomputed block holding
+    different rows breaks the exact-k guarantee."""
     from pyspark.storagelevel import StorageLevel
 
     from syzgydb_spark.cache import own_cached

@@ -6,11 +6,12 @@ a demo/ops surface, NOT the scale path: per BASELINE.json, single-query
 online serving is out of scope for a Spark engine. Each search runs
 one Spark job with one task per data file: the collection's live scan
 is built once per manifest snapshot and reused until the next commit
-(``Collection.df``). Measured with ``perfbench/run.py --workload
-serve`` (20,000 × 64 vectors in 64 files, ``local[4]`` on a 4-core
-machine, 2 clients): 1 job and 64 tasks per search, about 1 s per
-request, of which 0.15–0.35 s is driver planning. The batch APIs
-(Collection, knn_join, dedup) are the product.
+(``Collection.df``), and every commit writes one file per bucket.
+Measured with ``perfbench/run.py --workload serve`` (20,000 × 64
+vectors in 16 files, one per bucket, ``local[4]`` on a 4-core machine,
+2 clients): 1 job and 16 tasks per search, about 0.67 s per request
+(median of 10 runs), of which 0.16–0.21 s is driver planning. The
+batch APIs (Collection, knn_join, dedup) are the product.
 
 Endpoint surface (reference rest.go):
 

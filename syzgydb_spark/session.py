@@ -58,13 +58,29 @@ def get_spark(
             os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "4m"),
         )
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
+
+
+def driver_memory() -> str:
+    """``spark.driver.memory`` for a new session: ``$SPARK_DRIVER_MEMORY``
+    when set, else the smaller of 16g and half the host's physical RAM.
+    In local mode the driver JVM runs every task, and a heap sized past
+    the host's memory gets the process OOM-killed by the kernel instead
+    of collected by the JVM."""
+    env = os.environ.get("SPARK_DRIVER_MEMORY")
+    if env:
+        return env
+    try:
+        ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, ValueError, OSError):  # no sysconf (non-POSIX)
+        return "16g"
+    return f"{min(16 << 30, ram // 2) >> 20}m"
 
 
 def _parse_bytes(s: str) -> int:

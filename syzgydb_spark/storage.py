@@ -23,9 +23,11 @@ expected_version=V)``   ``expected_version``, a compare-and-swap that
                         across processes (flock here; the transaction
                         log protocol in Delta).
 ``commit_buckets(df,    replace exactly ``touched`` buckets' rows with
-touched, base, ...)``   ``df``'s, invisibly stage → publish via the CAS
-                        against ``base["version"]`` → reclaim replaced
-                        files (unless history is retained). On conflict
+touched, base, ...)``   ``df``'s, one file per touched bucket whatever
+                        ``df``'s partitioning, invisibly stage →
+                        publish via the CAS against ``base["version"]``
+                        → reclaim replaced files (unless history is
+                        retained). On conflict
                         the staged files must never have been visible
                         and must not leak past vacuum.
 ``vacuum(grace)``       delete unreferenced files, sparing files that
@@ -239,20 +241,26 @@ class ManifestBackend:
         version = base_version + 1
         staging = os.path.join(self.path, f"_staging_v{version}_{uuid.uuid4().hex[:8]}")
         shutil.rmtree(staging, ignore_errors=True)
+        # One file per bucket per commit: the partitioned writer emits
+        # a file per bucket per write task holding rows of it, so
+        # hash-partitioning by bucket (each bucket's rows in exactly
+        # one task) makes it one file per touched bucket whatever the
+        # input's partitioning. A live scan then opens n_buckets files
+        # in n_buckets tasks.
         # Zone-map clustering: sort each task's rows by (bucket,
-        # ivf_cell, id) so every emitted file's parquet row groups have
-        # tight min/max stats on the columns queries prune on —
+        # ivf_cell, id) so every file's parquet row groups have tight
+        # min/max stats on the columns queries prune on —
         # `ivf_cell IN (probed cells)` for precision='ivf'/'ivfpq'
-        # scans and `id = ?` for point lookups. A task-local sort (no
-        # shuffle); after `compact()` (one task per bucket) the whole
-        # bucket is perfectly clustered. At 100 TB this is the
-        # difference between a probe reading ~n_probes/n_clusters of
-        # each file and reading all of it.
+        # scans and `id = ?` for point lookups. Since a task holds whole
+        # buckets, every commit clusters each file over its whole
+        # bucket. At 100 TB this is the difference between a probe
+        # reading ~n_probes/n_clusters of each file and reading all of
+        # it.
         cluster_keys = ["bucket"]
         if "ivf_cell" in encoded.columns:
             cluster_keys.append("ivf_cell")
         cluster_keys.append("id")
-        encoded = encoded.sortWithinPartitions(*cluster_keys)
+        encoded = encoded.repartition("bucket").sortWithinPartitions(*cluster_keys)
         writer = encoded.write.mode("overwrite")
         if bloom_on_id:
             writer = writer.option(

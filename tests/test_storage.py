@@ -4,10 +4,11 @@ The reference reclaims replaced spans eagerly (spanfile free-span
 reuse, /root/reference/spanfile.go:282-357) and keeps no versions;
 these are Spark-native storage-maturity extensions in the same
 Delta-like idiom the manifest protocol already follows: compaction
-bounds per-bucket file counts (the upsert path adds one file per
-touched bucket per commit), and ``retain_history`` keeps every
-version's manifest + files readable via ``snapshot(version)`` until
-``expire_history`` prunes them.
+merges the several files per bucket that older versions of the
+library left (every commit now writes one file per touched bucket, so
+the fixture publishes the extra files itself), and ``retain_history``
+keeps every version's manifest + files readable via
+``snapshot(version)`` until ``expire_history`` prunes them.
 """
 
 import json
@@ -29,15 +30,49 @@ def _content(df):
     )
 
 
+def _publish_extra_files(c, rows, staging):
+    """Add ``rows`` (new ids) as one more file in each bucket they hash
+    to, beside the bucket's live files, and publish them through the
+    backend's manifest CAS: the several-files-per-bucket layout that
+    commits of older library versions left behind."""
+    enc = c._encode(c.spark.createDataFrame(rows, c.SCHEMA_BASE))
+    enc.coalesce(1).sortWithinPartitions("bucket", "id").write.partitionBy(
+        "bucket"
+    ).parquet(staging)
+    man = c._manifest()
+    version = man["version"] + 1
+    buckets = {b: list(files) for b, files in man["buckets"].items()}
+    for entry in os.listdir(staging):
+        if not entry.startswith("bucket="):
+            continue
+        b = entry.split("=", 1)[1]
+        dst_dir = os.path.join(c._data_dir(), entry)
+        os.makedirs(dst_dir, exist_ok=True)
+        for fname in os.listdir(os.path.join(staging, entry)):
+            if fname.endswith(".parquet"):
+                name = f"v{version}-{fname}"
+                os.replace(
+                    os.path.join(staging, entry, fname), os.path.join(dst_dir, name)
+                )
+                buckets.setdefault(b, []).append(name)
+    c.storage.flip_manifest(
+        {"version": version, "buckets": buckets}, expected_version=man["version"]
+    )
+
+
 @pytest.fixture()
 def coll(spark, tmp_path):
     opts = CollectionOptions(name="c", dimension_count=3, n_buckets=4)
     c = Collection.create(spark, str(tmp_path / "c"), opts)
-    # several commits → several files per bucket
+    # one commit, then two extra files per bucket → several files per bucket
     for lo in range(0, 60, 20):
-        c.add_documents(
-            [(i, [float(i), 0.0, 0.0], json.dumps({"i": i})) for i in range(lo, lo + 20)]
-        )
+        rows = [
+            (i, [float(i), 0.0, 0.0], json.dumps({"i": i})) for i in range(lo, lo + 20)
+        ]
+        if lo == 0:
+            c.add_documents(rows)
+        else:
+            _publish_extra_files(c, rows, str(tmp_path / f"staging{lo}"))
     return c
 
 
